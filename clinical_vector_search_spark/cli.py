@@ -12,20 +12,7 @@ from __future__ import annotations
 
 import argparse
 
-
-def build_spark(cpus: int = 8):
-    """Local session factory (reference src/pipeline/embedding.py:17-26)."""
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("clinical-vector-search-spark")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-    )
+from clinical_vector_search_spark.session import get_spark
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -44,7 +31,11 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--out", default=None, help="optional CSV output dir")
     args = p.parse_args(argv)
 
-    spark = build_spark(args.cpus)
+    spark = get_spark(
+        app_name="clinical-vector-search-spark",
+        master=f"local[{args.cpus}]",
+        shuffle_partitions=args.cpus,
+    )
     spark.sparkContext.setLogLevel("ERROR")
 
     from clinical_vector_search_spark.pipeline import modes as M

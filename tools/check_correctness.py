@@ -67,6 +67,8 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     only = set(sys.argv[1:])
+    # not session.get_spark: the oracle hashes were matched on non-Arrow
+    # toPandas, and Arrow renders array columns differently
     spark = (
         SparkSession.builder.master(f"local[{os.environ.get('CPUS', '16')}]")
         .config("spark.sql.shuffle.partitions", "16")

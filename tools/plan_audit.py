@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -64,20 +65,26 @@ def n_any_join(plan: str) -> int:
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
+    with tempfile.TemporaryDirectory(prefix="cvs_plan_") as scratch:
+        return audit(scratch)
+
+
+def audit(scratch: str) -> int:
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        # default 100-char metadata truncation can cut ReadSchema short and
-        # make the column-pruning check vacuously pass (column "absent"
-        # because truncated, not because pruned)
-        .config("spark.sql.maxMetadataStringLength", "10000")
-        .getOrCreate()
+    from clinical_vector_search_spark.session import get_spark
+
+    spark = get_spark(
+        app_name="plan_audit",
+        master="local[8]",
+        shuffle_partitions=8,
+        extra_conf={
+            "spark.driver.memory": "8g",
+            # default 100-char metadata truncation can cut ReadSchema
+            # short and make the column-pruning check vacuously pass
+            # (column "absent" because truncated, not because pruned)
+            "spark.sql.maxMetadataStringLength": "10000",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -1091,8 +1098,6 @@ def main() -> int:
     # three statistic directories once each, broadcast the query terms,
     # and contain no cartesian blowup — the global-stat rebuild is
     # vocabulary-granularity, never a postings rescan per stat
-    import tempfile as _tf
-
     from clinical_vector_search_spark.operators.bm25 import (
         bm25_index_add,
         bm25_read_index,
@@ -1102,7 +1107,7 @@ def main() -> int:
     _docs_bm = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "text"
     )
-    _bmdir = _tf.mkdtemp(prefix="cvs_plan_bm25_")
+    _bmdir = os.path.join(scratch, "bm25")
     bm25_index_add(spark, _docs_bm.filter(F.col("doc_id") < 50), 0, _bmdir)
     bm25_index_add(spark, _docs_bm.filter(F.col("doc_id") >= 50), 1, _bmdir)
     plan = formatted(
@@ -1160,8 +1165,6 @@ def main() -> int:
     # codegen expressions on the expr twin — no cartesian, no second
     # corpus scan, no Python workers. 3 parquet scans total: vectors,
     # codes, tombstones.
-    import tempfile as _tf2
-
     from clinical_vector_search_spark.functions import vector as _V
     from clinical_vector_search_spark.operators.pq import (
         ivfpq_encode,
@@ -1174,7 +1177,7 @@ def main() -> int:
     _vecs_pq = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
         "vec_id", _V.l2_normalize("embedding").alias("embedding")
     )
-    _rdir = _tf2.mkdtemp(prefix="cvs_plan_reidx_")
+    _rdir = os.path.join(scratch, "reidx")
     _books_r = pq_codebooks_lcg(64, 8, 16)
     ivfpq_index_add(
         spark, _vecs_pq.filter(F.col("vec_id") < 100), 0,
@@ -1239,9 +1242,7 @@ def main() -> int:
     # and new x new is the batch's own tiny self-join — so there is no
     # old x old rescan anywhere in the plan, no cartesian, and no
     # sort-merge join (everything batch-sized broadcasts).
-    import tempfile as _tf3
-
-    _sdir = _tf3.mkdtemp(prefix="cvs_plan_sem_")
+    _sdir = os.path.join(scratch, "sem")
     semantic_index_add(
         spark, _vecs_pq.filter(F.col("vec_id") % 8 != 3), 0,
         f"{_sdir}/assign", 64, n_clusters=8,

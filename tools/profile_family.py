@@ -11,72 +11,61 @@ durations — the local stand-in for the Spark UI's stage table
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import shutil
 import sys
 import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-args = [a for a in sys.argv[1:] if not a.startswith("--")]
-reps = 3
-for a in sys.argv[1:]:
-    if a.startswith("--reps"):
-        reps = int(a.split("=")[1])
+import bench  # noqa: E402
+from clinical_vector_search_spark.session import get_spark  # noqa: E402
+
+p = argparse.ArgumentParser(description="per-job profile of bench families")
+p.add_argument("families", nargs="+")
+p.add_argument("--reps", type=int, default=3)
+args = p.parse_args()
 
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 evdir = tempfile.mkdtemp(prefix="cvs_evlog_")
 
-from pyspark.sql import SparkSession
-
-spark = (
-    SparkSession.builder.master(f"local[{cpus}]")
-    .appName("cvs-spark-profile")
-    .config("spark.sql.shuffle.partitions", cpus)
-    .config("spark.driver.memory", "24g")
-    .config("spark.sql.adaptive.enabled", "true")
-    # mirror bench.py's session confs so profiles match benched plans
-    .config(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
-    )
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .config("spark.eventLog.enabled", "true")
-    .config("spark.eventLog.compress", "false")
-    .config("spark.eventLog.dir", evdir)
-    .getOrCreate()
+spark = get_spark(
+    app_name="cvs-spark-profile",
+    extra_conf={
+        **bench.SESSION_CONF,
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.dir": evdir,
+    },
 )
 spark.sparkContext.setLogLevel("ERROR")
 
-import tools._families as fam
-from tools.warmup_helper import warm_session
-
-warm_session(spark, sf_dir)
-benches = fam.build(spark, sf_dir, cpus)
-
-
-def materialize(df):
-    df.write.format("noop").mode("overwrite").save()
-
-
-# same JIT/HOF warmup spirit as bench.py: one throwaway run per family
-for name in args:
+bench.warm_session(spark, sf_dir)
+scratch = tempfile.mkdtemp(prefix="cvs_profile_")
+try:
+    benches, prebuilds = bench.families(spark, sf_dir, scratch)
+    for prebuild in prebuilds:
+        prebuild()
+    # same JIT/HOF warmup spirit as bench.py: one throwaway run per family
     sc = spark.sparkContext
-    fn = benches[name]
-    sc.setJobDescription(f"{name}|warmup")
-    t0 = time.time()
-    materialize(fn())
-    print(f"{name} warmup: {time.time()-t0:.3f}s", file=sys.stderr)
-    for r in range(reps):
-        sc.setJobDescription(f"{name}|rep{r}")
+    for name in args.families:
+        fn = benches[name]
+        sc.setJobDescription(f"{name}|warmup")
         t0 = time.time()
-        materialize(fn())
-        print(f"{name} rep{r}: {time.time()-t0:.3f}s", file=sys.stderr)
-    sc.setJobDescription(None)
-
-spark.stop()
+        bench.materialize(fn())
+        print(f"{name} warmup: {time.time()-t0:.3f}s", file=sys.stderr)
+        for r in range(args.reps):
+            sc.setJobDescription(f"{name}|rep{r}")
+            t0 = time.time()
+            bench.materialize(fn())
+            print(f"{name} rep{r}: {time.time()-t0:.3f}s", file=sys.stderr)
+        sc.setJobDescription(None)
+finally:
+    spark.stop()
+    shutil.rmtree(scratch, ignore_errors=True)
 
 # ---- parse the event log ----
 logf = None
@@ -154,3 +143,5 @@ for desc, js in per_desc.items():
             for sid, info in ss
         )
         print(f"  job {jid}: {d:6.3f}s  [{stage_str}]")
+
+shutil.rmtree(evdir, ignore_errors=True)

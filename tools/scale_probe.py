@@ -58,17 +58,13 @@ def timed(fn) -> float:
 
 
 def main() -> None:
-    from pyspark.sql import DataFrame, SparkSession
+    from pyspark.sql import DataFrame
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "24g")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    from clinical_vector_search_spark.session import get_spark
+
+    spark = get_spark(
+        app_name="cvs-scale-probe", extra_conf={"spark.driver.memory": "24g"}
     )
     spark.sparkContext.setLogLevel("ERROR")
 
